@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.catalog import repartition_compute, table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once
 
 #: In-order pair generator over a SORTED array column: all (x, y) with x
 #: before y in the array, as src/dst structs. With a sorted-distinct
@@ -59,31 +60,6 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
 # feed the join a DISTINCT (order, part) table, which makes the
 # self-join cheap, while the array generator still pays interpreted
 # HOF cost per pair. The basket self-joins stay as they were.
-
-
-def _bcast_edges(df: DataFrame) -> DataFrame:
-    """Broadcast-hint an EDGE-keyed frame of the co-purchase graph —
-    gated, because edges are CORPUS-scale (VERDICT r13 #1).
-
-    Unlike the node/label tables behind ``_bcast_nodes`` (bounded by the
-    part dimension), the co-purchase edge set grows with the corpus:
-    ~1.2M rows at sf0.1 (~19 MB hashed — past the 10 MB auto threshold,
-    hence the explicit hint) but far beyond any broadcast at 100 TB.
-    ``SOLARFLARE_GRAPH_BCAST=0`` swaps the hint for ``shuffle_merge``
-    so the sort-merge (shuffle) plan positively returns — merely
-    dropping the hint is not enough, because the checkpointed edge
-    stats sit under the session's 64 MB auto-broadcast threshold and
-    the planner re-broadcasts anyway (verified: the unhinted sf0.1
-    plan is byte-identical to the hinted one). This is the documented
-    fallback for deployments where the edge set outgrows executor
-    memory; at that scale keep the broadcast plan per graph-partition
-    (vertex-cut) or pre-filter with a bloom as the op docstrings
-    note."""
-    import os
-
-    if os.environ.get("SOLARFLARE_GRAPH_BCAST", "1") != "0":
-        return F.broadcast(df)
-    return df.hint("shuffle_merge")
 
 
 @register(
@@ -432,26 +408,26 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BROADCAST, turning the closure test into a map-side hash probe on
     # the wedge stream — wedges are never shuffled. The wedge join's
     # BUILD side is the same ~1.2M-row edge table, so it is broadcast
-    # too (r13, guide §3.1): the whole wedge+closure pipeline becomes
-    # one map-side pass over the checkpointed edges with two hash
-    # probes — zero data-scale exchanges below the final aggregate.
-    # At 100 TB the edge set outgrows a broadcast: both edge-table
-    # hints are gated (_bcast_edges, VERDICT r13 #1) —
-    # SOLARFLARE_GRAPH_BCAST=0 restores the shuffle-join plan; beyond
-    # that, keep the broadcast plan per graph-partition (vertex-cut)
-    # or fall back to the equi join with a bloom prefilter.
+    # too: the whole wedge+closure pipeline becomes one map-side pass
+    # over the checkpointed edges with two hash probes — zero
+    # data-scale exchanges below the final aggregate. Neither join
+    # carries a hint: the checkpointed edge stats sit under the
+    # session's 64 MB auto-broadcast threshold, so the planner picks
+    # both broadcasts itself, and past that threshold it falls back to
+    # the sort-merge plan on its own. At 100 TB keep the broadcast plan
+    # per graph-partition (vertex-cut) or add a bloom prefilter.
     ek = edges.select(
         (F.shiftleft(F.col("src"), 32).bitwiseOR(F.col("dst"))).alias("ek")
     )
     tri = (
-        e1.join(_bcast_edges(e2), F.col("e2.src") == F.col("e1.dst"))
+        e1.join(e2, F.col("e2.src") == F.col("e1.dst"))
         .select(
             F.col("e1.src").alias("pa"),
             F.col("e1.dst").alias("pb"),
             F.col("e2.dst").alias("pc"),
         )
         .join(
-            _bcast_edges(ek),
+            ek,
             F.shiftleft(F.col("pa"), 32).bitwiseOR(F.col("pc")) == F.col("ek"),
         )
         .drop("ek")
@@ -3032,9 +3008,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Score tables are NODE-keyed (parts / customers — dimension-sized):
     # broadcast them into the per-round join so the static edge side is
-    # probed map-side instead of re-shuffled every round (_bcast_nodes —
-    # same part-dimension justification as the CC rounds; at broadcast-
-    # exceeding scales SOLARFLARE_GRAPH_BCAST=0 restores the shuffle).
+    # probed map-side instead of re-shuffled every round (same
+    # part-dimension justification as the CC rounds).
     a = norm(
         edges.groupBy("part").agg(
             (F.count("*").cast("long") * HITS_SCALE).alias("a")
@@ -3043,21 +3018,21 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a",
     )
     h = norm(
-        edges.join(_bcast_nodes(a), "part")
+        edges.join(F.broadcast(a), "part")
         .groupBy("cust")
         .agg(F.sum("a").cast("long").alias("h")),
         "cust",
         "h",
     )
     a = norm(
-        edges.join(_bcast_nodes(h), "cust")
+        edges.join(F.broadcast(h), "cust")
         .groupBy("part")
         .agg(F.sum("h").cast("long").alias("a")),
         "part",
         "a",
     )
     h = norm(
-        edges.join(_bcast_nodes(a), "part")
+        edges.join(F.broadcast(a), "part")
         .groupBy("cust")
         .agg(F.sum("a").cast("long").alias("h")),
         "cust",
@@ -4218,33 +4193,16 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_ROUNDS = 4
 
 
-def _bcast_nodes(df: DataFrame) -> DataFrame:
-    """Broadcast-hint a NODE-keyed frame of the co-purchase graph.
-
-    The label/degree tables here are O(|part nodes|) — part is a
-    dimension table (catalog.DIM_TABLES: sub-linear in corpus scale),
-    so hinting the broadcast replaces a per-round shuffle of the
-    2.4M-row symmetric edge list with a map-side hash probe (guide
-    §3.1; measured at sf0.1: 0.49s vs 0.67s per propagation round,
-    1.27s vs 2.08s for the 4-round loop). Deployments where the node
-    table outgrows a broadcast set SOLARFLARE_GRAPH_BCAST=0 to keep
-    the shuffle-join plan (and at web scale swap the recurrence for
-    large-star/small-star, per the op docstrings). r14: the off
-    branch positively hints ``shuffle_merge`` — just dropping the
-    broadcast hint left the planner free to re-broadcast from stats
-    (verified on the sf0.1 round plans), which defeats the point of
-    the switch."""
-    import os
-
-    if os.environ.get("SOLARFLARE_GRAPH_BCAST", "1") != "0":
-        return F.broadcast(df)
-    return df.hint("shuffle_merge")
-
-
 def _cc_round(edges2: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label propagation round, PRE-checkpoint: pull each
     node's neighbor-min label over the symmetric edge list, fold it
-    into the current label with LEAST. Shared verbatim by the three
+    into the current label with LEAST. The label tables are
+    O(|part nodes|) — part is a dimension table (catalog.DIM_TABLES:
+    sub-linear in corpus scale) — so both joins broadcast them,
+    replacing a per-round shuffle of the 2.4M-row symmetric edge list
+    with a map-side hash probe (measured at sf0.1: 0.49s vs 0.67s per
+    round; at web scale swap the recurrence for large-star/small-star,
+    per the op docstrings). Shared verbatim by the three
     CC loops (graph_cc_portable, _cc_history_labels,
     cc_incremental_from_store) so the committed per-round plan dump
     (plans/r14/cc_round_*.txt, VERDICT r13 #9) is the literal plan
@@ -4252,7 +4210,7 @@ def _cc_round(edges2: DataFrame, labels: DataFrame) -> DataFrame:
     truncates lineage and hides this join from the final explain."""
     nbr = (
         edges2.join(
-            _bcast_nodes(
+            F.broadcast(
                 labels.select(
                     F.col("node").alias("dst"), F.col("lab").alias("nlab")
                 )
@@ -4263,7 +4221,7 @@ def _cc_round(edges2: DataFrame, labels: DataFrame) -> DataFrame:
         .agg(F.min("nlab").alias("mn"))
     )
     return labels.join(
-        _bcast_nodes(nbr.withColumnRenamed("src", "node")),
+        F.broadcast(nbr.withColumnRenamed("src", "node")),
         "node",
         "left",
     ).select(
@@ -4379,12 +4337,6 @@ def _cc_round_oracle2(k: int, edges: str, prefix: str) -> str:
         )"""
 
 
-#: Cross-run label store for graph_cc_incremental, keyed by sf_dir —
-#: the persisted state a daily CC job carries forward (the
-#: ensure_signature_store discipline from llm_dedup_near_incremental).
-_CC_STORE: dict[str, str] = {}
-
-
 def _cc_history_labels(spark: SparkSession, sf_dir: str):
     """CC_ROUNDS min-label propagation over the HISTORY co-purchase
     graph (orders with l_orderkey % 5 != 0) — the from-scratch pass the
@@ -4407,18 +4359,12 @@ def _cc_history_labels(spark: SparkSession, sf_dir: str):
 
 def ensure_cc_label_store(spark: SparkSession, sf_dir: str) -> str:
     """Persist the history graph's node -> component-label table once
-    per (process, sf) — the state a daily incremental CC job carries
-    forward."""
-    from solarflare_etl_pipeline_spark.state import store_path
-
-    # Content-addressed path (abspath + source fingerprint — ADVICE
-    # r12 #1): equal-basename fixture dirs can't collide, and an
-    # in-process rewrite of sf_dir yields a fresh path -> rebuild.
-    path = store_path("cc", sf_dir)
-    if path not in _CC_STORE:
-        _cc_history_labels(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _CC_STORE[path] = path
-    return path
+    per source — the state a daily incremental CC job carries forward."""
+    return build_once(
+        "cc_store",
+        sf_dir,
+        lambda path: _cc_history_labels(spark, sf_dir).write.mode("overwrite").parquet(path),
+    )
 
 
 @register(
@@ -4548,7 +4494,7 @@ def cc_incremental_from_store(
     )
     allnodes = store.unionByName(new_nodes)
     final = allnodes.join(
-        _bcast_nodes(
+        F.broadcast(
             remap.select(
                 F.col("node").alias("lab"), F.col("lab").alias("rlab")
             )

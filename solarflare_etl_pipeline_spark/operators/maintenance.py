@@ -38,7 +38,7 @@ a store REBUILT from the reduced corpus (band-for-band), hence every
 downstream incremental result equals the rebuilt-store result.
 
 Both ops write to derived paths (``<store>_compact`` / ``<store>_ttl``)
-and never repoint the canonical ensure_* caches — a maintenance run in
+and never touch the canonical ensure_* stores — a maintenance run in
 the registry must not change any other registered query's answer
 mid-session.  In production the swap is an atomic table-format commit
 (RENAME / Iceberg snapshot replace) executed by the scheduler after the
@@ -293,8 +293,8 @@ def maintenance_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_ffd_run_store,
     )
 
-    # Resolve (and if cold, build) the store paths serially — the
-    # ensure_* helpers guard module-level caches with check-then-act.
+    # Resolve (and if cold, build) the store paths serially —
+    # state.build_once checks then builds, without a lock.
     cc_path = ensure_cc_label_store(spark, sf_dir)
     ffd_path = ensure_ffd_run_store(spark, sf_dir)
     sig_path = ensure_signature_store(spark, sf_dir)

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once
 
 
 def _with_binary_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,28 +322,14 @@ def resize_nearest(px, out_w: int, out_h: int):
     return px[np.ix_(ys, xs)]
 
 
-#: (abs sf_dir) -> path of the binary-payload parquet this process wrote
-#: (write-once per process+sf, the sinks.py idempotency discipline).
-_PAYLOADS: dict[str, str] = {}
-
-
 def ensure_payloads(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (doc_id, wav, png) — real WAV and PNG bytes per
-    document — exactly once per (process, sf). The encode runs
+    document — once per source. The encode runs
     distributed (one Arrow mapInPandas pass over documents); at 100 TB
     this table IS the multimodal source (payloads arrive from object
     storage) and only the decode operators below exist."""
-    import os
-    import tempfile
 
-    key = os.path.abspath(sf_dir)
-    path = _PAYLOADS.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_mm_payloads_{os.path.basename(key)}_{os.getpid()}",
-        )
-
+    def write(path: str) -> None:
         def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 yield pd.DataFrame(
@@ -365,8 +352,8 @@ def ensure_payloads(spark: SparkSession, sf_dir: str) -> str:
         )
         docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
         docs.mapInPandas(build, schema).write.mode("overwrite").parquet(path)
-        _PAYLOADS[key] = path
-    return path
+
+    return build_once("mm_payloads", sf_dir, write)
 
 
 WAV_SCHEMA = T.StructType(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.catalog import repartition_compute, table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once
 
 DIM = 64
 N_QUERIES = 10  # vec_id < 10 are the query vectors in the registered top-k ops
@@ -268,29 +269,17 @@ def llm_dedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, [k minhash values]) over 3-gram shingles — shuffle-free.
+def _minhash_from_shingles(d: DataFrame) -> DataFrame:
+    """k minhashes from a (doc_id, shingles) frame — a narrow map.
 
     Shingling is load-bearing: the fixture vocabulary is ~31 words, so
     raw token sets are degenerate (all docs mutually similar ⇒ LSH
     candidates go quadratic); 3-gram shingles live in a 31³ space where
-    only true near-dups collide.
-
-    Each minhash is ``array_min`` of an affine transform over the
-    per-row hash array — a narrow map, no explode, no groupBy: at any
-    scale, signatures cost one pass over the documents with zero
-    exchange (the old explode + 32-min-agg formulation shuffled ~50×
-    the corpus row count).  ``repartition`` only widens local
-    parallelism for the CPU-heavy map when the scan is a single file.
+    only true near-dups collide. Each minhash is ``array_min`` of an
+    affine transform over the per-row hash array — no explode, no
+    groupBy, so signatures cost one pass over the documents with zero
+    exchange.
     """
-    from solarflare_etl_pipeline_spark.operators.text import with_shingles
-
-    d = with_shingles(repartition_compute(table(spark, sf_dir, "documents"), "doc_id"))
-    return _minhash_from_shingles(d)
-
-
-def _minhash_from_shingles(d: DataFrame) -> DataFrame:
-    """k minhashes from a (doc_id, shingles) frame — a narrow map."""
     # base hash per shingle, folded into the 31-bit field; materialized
     # as a column so the k affine transforms don't re-hash (no CSE
     # inside lambdas)
@@ -1111,22 +1100,13 @@ def _band_explode(sig: DataFrame) -> DataFrame:
     )
 
 
-#: (abs sf_dir) -> path of the persisted LSH signature store (docs with
-#: doc_id % 5 != 0 — "yesterday's corpus") for the incremental variant.
-_SIG_STORE: dict[str, str] = {}
-
-
 def ensure_signature_store(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the banding table of the existing corpus once per
-    (process, sf) — the state a daily near-dedup job carries forward."""
+    """Persist the banding table of the existing corpus (docs with
+    doc_id % 5 != 0 — "yesterday's corpus") once per source — the state
+    a daily near-dedup job carries forward."""
     from solarflare_etl_pipeline_spark.operators.text import with_shingles
-    from solarflare_etl_pipeline_spark.state import store_path
 
-    # Content-addressed path (abspath + source fingerprint — ADVICE
-    # r12 #1): equal-basename fixture dirs can't collide, and an
-    # in-process rewrite of sf_dir yields a fresh path -> rebuild.
-    path = store_path("sig", sf_dir)
-    if path not in _SIG_STORE:
+    def build(path: str) -> None:
         store_docs = with_shingles(
             repartition_compute(
                 table(spark, sf_dir, "documents").where(F.col("doc_id") % 5 != 0),
@@ -1136,8 +1116,8 @@ def ensure_signature_store(spark: SparkSession, sf_dir: str) -> str:
         _band_explode(_minhash_from_shingles(store_docs)).write.mode(
             "overwrite"
         ).parquet(path)
-        _SIG_STORE[path] = path
-    return path
+
+    return build_once("sig_store", sf_dir, build)
 
 
 @register(
@@ -3942,23 +3922,18 @@ IVFI_CK = 16        # argmin composite stride: > max seed id (9)
 IVFI_NPROBE = 3     # cells probed per batch vector
 IVFI_TOPK = 3       # neighbors returned per batch vector
 
-#: (store path) -> path of the persisted IVF index (centroids + lists)
-_IVF_STORE: dict[str, str] = {}
-
 
 def ensure_ivf_index_store(spark: SparkSession, sf_dir: str) -> str:
     """Persist the IVF coarse index of the HISTORY vectors (vec_id % 5
-    != 0) once per (process, source identity): ``<path>/centroids`` =
+    != 0) once per source: ``<path>/centroids`` =
     the (cid, pos, cq) table after two exact-integer Lloyd rounds
     (the llm_kmeans_portable arithmetic — quantized coords, composite
     argmin, pmod floor-means — restricted to history, seeds = history
     vec_ids < IVFI_SEED_CAP), ``<path>/lists`` = the (vec_id, cid)
     inverted lists. This is the state a daily ANN job carries forward;
     the batch never re-trains it."""
-    from solarflare_etl_pipeline_spark.state import store_path
 
-    path = store_path("ivf", sf_dir)
-    if path not in _IVF_STORE:
+    def build(path: str) -> None:
         x = (
             table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") % 5 != 0)
@@ -4014,16 +3989,15 @@ def ensure_ivf_index_store(spark: SparkSession, sf_dir: str) -> str:
             spark.createDataFrame([], "vec_id long, cid long").write.mode(
                 "overwrite"
             ).parquet(path + "/lists")
-            _IVF_STORE[path] = path
-            return path
+            return
         a1 = assign(c0)
         c1 = update(a1)
         a2 = assign(c1)
         c2 = update(a2)
         c2.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
         a2.coalesce(1).write.mode("overwrite").parquet(path + "/lists")
-        _IVF_STORE[path] = path
-    return path
+
+    return build_once("ivf_store", sf_dir, build)
 
 
 def _ivf_inc_oracle() -> str:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.catalog import repartition_compute, table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once
 
 #: Tiny per-language marker lexicons for the n-gram/stopword heuristic
 #: language scorer. Deterministic and engine-portable (plain array
@@ -9109,12 +9110,6 @@ def llm_pack_ffd_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Cross-run FFD run-table store for llm_pack_ffd_incremental, keyed by
-#: sf_dir — the persisted state a daily packing job carries forward
-#: (the ensure_signature_store / ensure_cc_label_store discipline).
-_FFD_STORE: dict[str, str] = {}
-
-
 def _size_hist(items: DataFrame) -> dict[int, int]:
     """Collect the BOUNDED (<= CHUNK_TOKENS-row) size-class histogram."""
     return {
@@ -9127,15 +9122,10 @@ def _size_hist(items: DataFrame) -> dict[int, int]:
 
 def ensure_ffd_run_store(spark: SparkSession, sf_dir: str) -> str:
     """Persist the run-compressed bin table left after FFD-packing the
-    HISTORY chunks (doc_id % 5 != 0) once per (process, sf) — the
+    HISTORY chunks (doc_id % 5 != 0) once per source — the
     <= ~130-row state tomorrow's batch continues packing from."""
-    from solarflare_etl_pipeline_spark.state import store_path
 
-    # Content-addressed path (abspath + source fingerprint — ADVICE
-    # r12 #1): equal-basename fixture dirs can't collide, and an
-    # in-process rewrite of sf_dir yields a fresh path -> rebuild.
-    path = store_path("ffd", sf_dir)
-    if path not in _FFD_STORE:
+    def build(path: str) -> None:
         hist_docs = table(spark, sf_dir, "documents").where(
             F.col("doc_id") % 5 != 0
         )
@@ -9147,8 +9137,8 @@ def ensure_ffd_run_store(spark: SparkSession, sf_dir: str) -> str:
         spark.createDataFrame(
             run_state, "pos long, cap long, cnt long"
         ).coalesce(1).write.mode("overwrite").parquet(path)
-        _FFD_STORE[path] = path
-    return path
+
+    return build_once("ffd_store", sf_dir, build)
 
 
 @register(

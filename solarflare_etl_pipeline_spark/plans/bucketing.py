@@ -9,16 +9,15 @@ query) into a scan-side merge.
 
 ``join_bucketed`` is registered as a driver query: it materializes
 bucketed copies of orders/lineitem with ``bucketBy(8, key).sortBy(key)``
-(once per scale factor — table names are sf-scoped so one process can
-serve several fixture scales without stale reads) and returns the joined
-aggregate; ``tests/test_semantics.py::test_bucketed_join_no_shuffle``
+(external tables in the scratch space, named and placed by
+``state.store_path`` so each source directory gets its own) and returns
+the joined aggregate; ``tests/test_semantics.py::test_bucketed_join_no_shuffle``
 asserts the executed plan contains no Exchange above either scan.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,36 +32,26 @@ from solarflare_etl_pipeline_spark.functions.numeric import (
     sql_rate,
 )
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import store_path
 
 N_BUCKETS = 8
 
 
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-
-
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write bucketed managed copies of orders/lineitem (idempotent per
-    scale factor) and return their table names."""
-    # (warehouse dir is a static conf — bucketed tables land in the
-    # session's default spark-warehouse; fine for the demo/test)
+    """Write bucketed external copies of orders/lineitem once per source
+    and session, and return their table names (the scratch leaf name
+    doubles as the table name)."""
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    tag = _sf_tag(sf_dir)
     names = []
     for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        tbl = f"bkt_{tag}_{name}"
+        path = store_path(f"bkt_{name}", sf_dir)
+        tbl = os.path.basename(path)
         names.append(tbl)
         if not spark.catalog.tableExists(tbl):
-            # the session catalog is in-memory: a previous process may
-            # have left the warehouse directory behind without catalog
-            # metadata — clear it or saveAsTable refuses the location
-            leftover = os.path.join(
-                spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"), tbl
-            )
-            shutil.rmtree(leftover, ignore_errors=True)
             (
                 table(spark, sf_dir, name)
                 .write.mode("overwrite")
+                .option("path", path)
                 .bucketBy(N_BUCKETS, key)
                 .sortBy(key)
                 .saveAsTable(tbl)

@@ -117,9 +117,3 @@ def single_partition_ordered_stages(plan: str) -> list[str]:
                 break
     return hits
 
-
-def assert_no_cartesian(df: DataFrame) -> None:
-    """Guard: deliberate cross joins are the only acceptable ones."""
-    report = plan_report(df)
-    if report["nested_loop_joins"] != 0:  # explicit raise: survives -O
-        raise AssertionError(physical_plan(df)[:2000])

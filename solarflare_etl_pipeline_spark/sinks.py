@@ -24,7 +24,6 @@ tasks × partitions files).  At 100 TB add
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +37,7 @@ from solarflare_etl_pipeline_spark.functions.numeric import (
     sql_rate,
 )
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once, store_path
 
 
 def write_partitioned_parquet(df: DataFrame, path: str, partition_col: str) -> None:
@@ -76,7 +76,7 @@ def write_jdbc(df: DataFrame, url: str, table_name: str, mode: str = "append", *
     "Postgres/MySQL by swapping the URL.",
 )
 def sink_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    url = f"jdbc:derby:{os.path.join(tempfile.gettempdir(), 'solarflare_derby')};create=true"
+    url = f"jdbc:derby:{store_path('derby', sf_dir)};create=true"
     agg = (
         table(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")
@@ -104,12 +104,8 @@ def sink_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fidelity and partition completeness through the write→read cycle.",
 )
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pid-scoped: two engine processes at the same sf must not race on one
-    # overwrite target (and a sink should rewrite per call — that IS the op).
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_sink_parquet_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
+    # a sink rewrites its target on every call — that IS the op
+    target = store_path("sink_parquet", sf_dir)
     o = table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("long")
     )
@@ -121,32 +117,18 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (abs sf_dir) -> path of the year-partitioned orders copy this process
-#: already wrote. Registered queries must be side-effect-idempotent: the
-#: first builder of round 2 rewrote (mode=overwrite) a FIXED path on every
-#: invocation, so two processes at the same sf raced on the directory and
-#: a DataFrame planned before a rewrite held a stale file index
-#: (FileNotFoundException at execution). Pid-scoped path + write-once cache
-#: removes both failure modes.
-_ORDERS_BY_YEAR: dict[str, str] = {}
-
-
 def ensure_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Return the path of a year-partitioned copy of ``orders`` for this
-    (process, sf), writing it exactly once per process."""
-    key = os.path.abspath(sf_dir)
-    path = _ORDERS_BY_YEAR.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_orders_by_year_{os.path.basename(key)}_{os.getpid()}",
-        )
+    """Return the path of a year-partitioned copy of ``orders``, written
+    once per source. Writing it once matters: a rewrite would leave a
+    DataFrame planned before it holding a stale file index."""
+
+    def build(path: str) -> None:
         o = table(spark, sf_dir, "orders").withColumn(
             "order_year", F.year("o_orderdate").cast("long")
         )
         write_partitioned_parquet(o, path, "order_year")
-        _ORDERS_BY_YEAR[key] = path
-    return path
+
+    return build_once("orders_by_year", sf_dir, build)
 
 
 def pruned_orders_scan(spark: SparkSession, sf_dir: str, year: int = 1997) -> DataFrame:
@@ -215,24 +197,13 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (abs sf_dir) -> path of the ORC copy of lineitem this process wrote
-#: (write-once per process+sf, same idempotency discipline as
-#: ensure_partitioned_orders).
-_ORC_LINEITEM: dict[str, str] = {}
-
-
 def ensure_orc_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    """Write an ORC copy of ``lineitem`` exactly once per (process, sf)."""
-    key = os.path.abspath(sf_dir)
-    path = _ORC_LINEITEM.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_lineitem_orc_{os.path.basename(key)}_{os.getpid()}",
-        )
-        table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(path)
-        _ORC_LINEITEM[key] = path
-    return path
+    """Write an ORC copy of ``lineitem`` once per source."""
+    return build_once(
+        "lineitem_orc",
+        sf_dir,
+        lambda path: table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(path),
+    )
 
 
 @register(
@@ -261,11 +232,6 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (abs sf_dir) -> path of the day-partitioned events sink state this
-#: process wrote (write-once per process+sf, same idempotency discipline
-#: as ensure_partitioned_orders).
-_EVENTS_BY_DAY: dict[str, str] = {}
-
 #: The reference re-fetches a 30-day overlapping window each run and
 #: relies on key conflicts for idempotence (dags/etl.py:74, README.md:74).
 #: Here: sink state holds everything before CUT; the incoming batch
@@ -275,24 +241,18 @@ _INCR_OVERLAP_START = "2024-01-05"
 
 
 def ensure_day_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Write the pre-cutoff slice of ``events`` day-partitioned exactly
-    once per (process, sf) — the simulated sink state of all previous
-    daily runs."""
-    key = os.path.abspath(sf_dir)
-    path = _EVENTS_BY_DAY.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_events_by_day_{os.path.basename(key)}_{os.getpid()}",
-        )
+    """Write the pre-cutoff slice of ``events`` day-partitioned once per
+    source — the simulated sink state of all previous daily runs."""
+
+    def build(path: str) -> None:
         e = (
             table(spark, sf_dir, "events")
             .where(F.col("ts") < _INCR_CUT)
             .withColumn("event_date", F.to_date("ts"))
         )
         write_partitioned_parquet(e, path, "event_date")
-        _EVENTS_BY_DAY[key] = path
-    return path
+
+    return build_once("events_by_day", sf_dir, build)
 
 
 def pruned_existing_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,16 +311,8 @@ def sink_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("n_new"))
 
 
-#: (abs sf_dir) -> (small_dir, compacted_dir) for the compaction demo
-#: (write-once per process+sf).
-_COMPACT_DIRS: dict[str, tuple[str, str]] = {}
-
 _SMALL_FILES = 16
 _COMPACT_FILES = 2
-
-
-def _parquet_part_files(path: str) -> list[str]:
-    return [f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")]
 
 
 @register(
@@ -386,13 +338,9 @@ def _parquet_part_files(path: str) -> list[str]:
     "unchanged.",
 )
 def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = os.path.abspath(sf_dir)
-    dirs = _COMPACT_DIRS.get(key)
-    if dirs is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_compact_{os.path.basename(key)}_{os.getpid()}",
-        )
+    from solarflare_etl_pipeline_spark.operators.maintenance import _part_files
+
+    def build(base: str) -> None:
         small, compacted = os.path.join(base, "small"), os.path.join(base, "compacted")
         e = table(spark, sf_dir, "events")
         # the small-files state a per-trigger streaming writer accretes
@@ -401,20 +349,17 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(small).coalesce(_COMPACT_FILES).write.mode(
             "overwrite"
         ).parquet(compacted)
-        _COMPACT_DIRS[key] = dirs = (small, compacted)
-    small, compacted = dirs
+
+    base = build_once("compact", sf_dir, build)
+    small, compacted = os.path.join(base, "small"), os.path.join(base, "compacted")
     back = spark.read.parquet(compacted)
     return back.agg(
-        F.lit(len(_parquet_part_files(small))).cast("int").alias("n_files_before"),
-        F.lit(len(_parquet_part_files(compacted))).cast("int").alias("n_files_after"),
+        F.lit(len(_part_files(small))).cast("int").alias("n_files_before"),
+        F.lit(len(_part_files(compacted))).cast("int").alias("n_files_after"),
         F.count("*").alias("n_rows"),
         dsum("value", "total_value"),
     )
 
-
-#: (abs sf_dir) -> path of the persisted daily rollup state this process
-#: wrote (write-once per process+sf, the sinks idempotency discipline).
-_ROLLUP_STATE: dict[str, str] = {}
 
 #: Mid-day cutoff ON PURPOSE: the 2024-01-10 key exists in BOTH the
 #: persisted rollup state (morning rows) and the incoming batch
@@ -442,23 +387,19 @@ def _daily_partials(df: DataFrame) -> DataFrame:
 
 
 def ensure_daily_rollup_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the pre-cutoff daily rollup exactly once per
-    (process, sf) — the persisted aggregate state all previous daily
-    runs accreted. One row per (day, event_type): at 100 TB this table
-    is ~(days × types) rows — megabytes — regardless of raw volume."""
-    key = os.path.abspath(sf_dir)
-    path = _ROLLUP_STATE.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_daily_rollup_{os.path.basename(key)}_{os.getpid()}",
-        )
-        state = _daily_partials(
+    """Materialize the pre-cutoff daily rollup once per source — the
+    persisted aggregate state all previous daily runs accreted. One row
+    per (day, event_type): at 100 TB this table is ~(days × types)
+    rows — megabytes — regardless of raw volume."""
+    return build_once(
+        "daily_rollup",
+        sf_dir,
+        lambda path: _daily_partials(
             table(spark, sf_dir, "events").where(F.col("ts") < _MERGE_AGG_CUT)
         )
-        state.write.mode("overwrite").parquet(path)
-        _ROLLUP_STATE[key] = path
-    return path
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 @register(
@@ -518,10 +459,6 @@ def sink_merge_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (abs sf_dir) -> base path of the two-epoch schema-evolution dataset
-#: this process wrote (write-once per process+sf).
-_EVOLVED_DIRS: dict[str, str] = {}
-
 _EVOLVE_CUT = "2024-01-15"
 
 
@@ -530,13 +467,8 @@ def ensure_evolved_dataset(spark: SparkSession, sf_dir: str) -> str:
     schemas — epoch 1 (pre-cut) lacks the ``value`` column, epoch 2
     (post-cut) carries it — the long-lived-table reality every 100 TB
     dataset reaches (columns get added; history is never rewritten)."""
-    key = os.path.abspath(sf_dir)
-    base = _EVOLVED_DIRS.get(key)
-    if base is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_evolved_{os.path.basename(key)}_{os.getpid()}",
-        )
+
+    def build(base: str) -> None:
         e = table(spark, sf_dir, "events")
         e.where(F.col("ts") < _EVOLVE_CUT).select(
             "event_id", "ts", "user_id", "event_type"
@@ -544,8 +476,8 @@ def ensure_evolved_dataset(spark: SparkSession, sf_dir: str) -> str:
         e.where(F.col("ts") >= _EVOLVE_CUT).select(
             "event_id", "ts", "user_id", "event_type", "value"
         ).write.mode("overwrite").parquet(os.path.join(base, "epoch=2"))
-        _EVOLVED_DIRS[key] = base
-    return base
+
+    return build_once("evolved", sf_dir, build)
 
 
 @register(
@@ -609,10 +541,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the storage layer, and the doc says so.",
 )
 def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_sink_csv_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
+    target = store_path("sink_csv", sf_dir)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -720,11 +649,6 @@ def maintenance_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (abs sf_dir) -> path of the persisted join-aggregate state this
-#: process wrote (write-once per process+sf, the sinks idempotency
-#: discipline).
-_IVM_STATE: dict[str, str] = {}
-
 #: Portable 10%-of-keys "latest ingest batch" selectors. Hash-based ON
 #: PURPOSE (not a date cutoff): real pipelines receive LATE-ARRIVING
 #: rows on both sides of a join, so the maintenance algebra must hold
@@ -755,24 +679,19 @@ def _ivm_partials(joined: DataFrame) -> DataFrame:
 
 
 def ensure_ivm_join_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the old-orders x old-lineitems join aggregate exactly
-    once per (process, sf) — the state all previous maintenance runs
-    accreted. One row per priority: constant-sized at any history."""
-    key = os.path.abspath(sf_dir)
-    path = _IVM_STATE.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_ivm_join_{os.path.basename(key)}_{os.getpid()}",
-        )
+    """Materialize the old-orders x old-lineitems join aggregate once
+    per source — the state all previous maintenance runs accreted. One
+    row per priority: constant-sized at any history."""
+
+    def build(path: str) -> None:
         o_old = table(spark, sf_dir, "orders").where(f"NOT ({_IVM_ORD_DELTA})")
         l_old = table(spark, sf_dir, "lineitem").where(f"NOT ({_IVM_LI_DELTA})")
         state = _ivm_partials(
             o_old.join(l_old, o_old.o_orderkey == l_old.l_orderkey)
         )
         state.write.mode("overwrite").parquet(path)
-        _IVM_STATE[key] = path
-    return path
+
+    return build_once("ivm_join", sf_dir, build)
 
 
 @register(
@@ -855,10 +774,7 @@ def sink_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one write.",
 )
 def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_sink_dynover_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
+    target = store_path("sink_dynover", sf_dir)
     o = table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("long")
     )
@@ -1022,10 +938,7 @@ def maintenance_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "loses pushdown — export edge only, like sink_csv.",
 )
 def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_sink_jsonl_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
+    target = store_path("sink_jsonl", sf_dir)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1070,10 +983,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     "read-back aggregate prune to 4 columns).",
 )
 def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_sink_orc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
+    target = store_path("sink_orc", sf_dir)
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_extendedprice", "l_quantity"
     )

@@ -34,7 +34,6 @@ import io
 import json
 import os
 import struct
-import tempfile
 import zlib
 from collections.abc import Iterator, Sequence
 
@@ -49,6 +48,7 @@ from pyspark.sql.datasource import (
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once, store_path
 
 MAGIC = b"Obj\x01"
 SYNC = bytes(range(7, 23))  # fixed 16-byte marker (deterministic fixture)
@@ -210,22 +210,13 @@ def read_ocf(path: str) -> Iterator[tuple]:
 
 # ---------------------------------------------------------------- fixture
 
-#: (abs sf_dir) -> directory of .avro shards this process already wrote.
-_DOCS_AVRO: dict[str, str] = {}
-
-
 def ensure_documents_avro(spark: SparkSession, sf_dir: str, n_shards: int = 4) -> str:
-    """Write documents as ``n_shards`` OCF files once per (process, sf).
+    """Write documents as ``n_shards`` OCF files once per source.
     The encode runs DISTRIBUTED — each executor partition streams its
     slice through ``write_ocf`` into one shard; only the shard paths
     (bounded: n_shards rows) return to the driver."""
-    key = os.path.abspath(sf_dir)
-    path = _DOCS_AVRO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_docs_avro_{os.path.basename(key)}_{os.getpid()}",
-        )
+
+    def build(path: str) -> None:
         os.makedirs(path, exist_ok=True)
 
         def write_shard(batches):
@@ -257,8 +248,8 @@ def ensure_documents_avro(spark: SparkSession, sf_dir: str, n_shards: int = 4) -
                 f"avro shard write produced {len(paths)} of "
                 f"{n_shards} expected shards"
             )
-        _DOCS_AVRO[key] = path
-    return path
+
+    return build_once(f"docs_avro{n_shards}", sf_dir, build)
 
 
 # ----------------------------------------------------------------- reader
@@ -404,10 +395,7 @@ def sink_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.dataSource.register(AvroOcfDataSource)
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_sink_avro_{os.path.basename(os.path.abspath(sf_dir))}_{os.getpid()}",
-    )
+    target = store_path("sink_avro", sf_dir)
     os.makedirs(target, exist_ok=True)
     for f in os.listdir(target):  # overwrite semantics for reruns
         os.unlink(os.path.join(target, f))

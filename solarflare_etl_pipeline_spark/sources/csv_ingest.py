@@ -16,8 +16,7 @@ Spark-first mechanics this exercises:
     NULL-filling (PERMISSIVE) turns data bugs into model bugs.
 
 The registered query writes a CSV copy of ``customer`` once per
-(process, sf) — same write-once discipline as
-``sinks.ensure_partitioned_orders`` — reads it back through the typed
+source (``state.build_once``), reads it back through the typed
 schema, and applies a filter+projection. The oracle recomputes the
 expected result from the parquet view, so the round trip itself is
 what is being certified (Java's Double.toString is shortest-repr
@@ -26,15 +25,13 @@ round-trippable, so doubles survive text exactly).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once, store_path
 
 CUSTOMER_CSV_SCHEMA = T.StructType(
     [
@@ -46,27 +43,17 @@ CUSTOMER_CSV_SCHEMA = T.StructType(
     ]
 )
 
-#: (abs sf_dir) -> path of the CSV copy this process already wrote.
-_CUSTOMER_CSV: dict[str, str] = {}
-
 
 def ensure_customer_csv(spark: SparkSession, sf_dir: str) -> str:
-    """Write ``customer`` as headered CSV once per (process, sf)."""
-    key = os.path.abspath(sf_dir)
-    path = _CUSTOMER_CSV.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_customer_csv_{os.path.basename(key)}_{os.getpid()}",
-        )
-        (
-            table(spark, sf_dir, "customer")
-            .write.mode("overwrite")
-            .option("header", True)
-            .csv(path)
-        )
-        _CUSTOMER_CSV[key] = path
-    return path
+    """Write ``customer`` as headered CSV once per source."""
+    return build_once(
+        "customer_csv",
+        sf_dir,
+        lambda path: table(spark, sf_dir, "customer")
+        .write.mode("overwrite")
+        .option("header", True)
+        .csv(path),
+    )
 
 
 @register(
@@ -133,13 +120,7 @@ def ingest_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "any scale.",
 )
 def ingest_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
-
-    target = _os.path.join(
-        _tempfile.gettempdir(),
-        f"solarflare_corrupt_csv_{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}.csv",
-    )
+    target = store_path("corrupt_csv", sf_dir)
     line = F.concat_ws(
         ",", F.col("doc_id"), F.col("lang"), F.col("n_chars")
     )
@@ -202,13 +183,7 @@ FW_NUM_W = 10    # n_chars left-padded (right-aligned) to 10
     f"export pipelines land in Spark.",
 )
 def ingest_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
-
-    target = _os.path.join(
-        _tempfile.gettempdir(),
-        f"solarflare_fixed_width_{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}.txt",
-    )
+    target = store_path("fixed_width", sf_dir)
     line = F.concat(
         F.rpad(F.col("doc_id").cast("string"), FW_ID_W, " "),
         F.rpad(F.col("lang"), FW_LANG_W, " "),

@@ -20,47 +20,34 @@ the JDBCRelation scan).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.functions.numeric import dsum
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once
 
-#: pid-scoped Derby database dir (embedded Derby locks the db per JVM;
-#: pid-scoping keeps concurrent engine processes off each other's files).
-_DB: dict[str, bool] = {}
-
-
-def _derby_url() -> str:
-    return (
-        "jdbc:derby:"
-        + os.path.join(tempfile.gettempdir(), f"solarflare_derby_src_{os.getpid()}")
-        + ";create=true"
-    )
 
 
 def _ensure_orders_table(spark: SparkSession, sf_dir: str) -> str:
-    """Load a projected slice of ``orders`` into Derby once per
-    (process, sf); returns the JDBC url."""
-    url = _derby_url()
-    key = os.path.abspath(sf_dir)
-    if not _DB.get(key):
+    """Load a projected slice of ``orders`` into an embedded Derby
+    database once per source; returns the JDBC url. Embedded Derby
+    locks a database per JVM, so each process gets its own."""
+
+    def build(db: str) -> None:
         (
             table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
             .write.format("jdbc")
-            .option("url", url)
+            .option("url", f"jdbc:derby:{db};create=true")
             .option("dbtable", "orders_src")
             .option("batchsize", "10000")
             .mode("overwrite")
             .save()
         )
-        _DB[key] = True
-    return url
+
+    return f"jdbc:derby:{build_once('derby_src', sf_dir, build)};create=true"
 
 
 @register(

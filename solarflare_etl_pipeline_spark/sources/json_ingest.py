@@ -7,7 +7,8 @@ re-expressed Spark-first:
   * HTTP JSON payload            → ``spark.read.schema(...).json`` /
                                    ``from_json`` on staged payloads
   * per-record projection/rename → one ``select`` with aliases
-  * null-tolerant field access   → permissive read (missing key ⇒ NULL)
+  * null-tolerant field access   → schema'd read (missing key ⇒ NULL;
+                                   a malformed record fails the load)
   * implicit string→type casts   → explicit ``to_timestamp`` / ``cast``
   * row-at-a-time keyed INSERT   → bulk ``dropDuplicates`` + left-anti
     (ON CONFLICT DO NOTHING)       join + single append write
@@ -20,12 +21,14 @@ regression in ``tests/test_solar_flare_pipeline.py``.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import store_path
 
 #: Typed schema of the DONKI FLR payload consumed by the reference
 #: (fields used at /root/reference/dags/etl.py:54-61).
@@ -47,9 +50,12 @@ ISO_MINUTE = "yyyy-MM-dd'T'HH:mm'Z'"
 
 def read_flare_json(spark: SparkSession, path: str) -> DataFrame:
     """Stage-file equivalent of the reference's HttpOperator fetch
-    (dags/etl.py:36-45): schema'd permissive JSON read — missing keys
-    become NULL exactly like the reference's ``dict.get``."""
-    return spark.read.schema(FLARE_RAW_SCHEMA).json(path)
+    (dags/etl.py:36-45): schema'd JSON read of NDJSON or one-line JSON
+    arrays. Missing keys become NULL exactly like the reference's
+    ``dict.get``; a malformed record (a pretty-printed array, a
+    truncated line) fails the read instead of loading as an all-NULL
+    row that the keyed dedup could never match."""
+    return spark.read.schema(FLARE_RAW_SCHEMA).option("mode", "FAILFAST").json(path)
 
 
 def transform_flares(raw: DataFrame) -> DataFrame:
@@ -90,7 +96,11 @@ def load_flares(spark: SparkSession, json_path: str, target_path: str) -> None:
     batch = transform_flares(read_flare_json(spark, json_path))
     try:
         existing = spark.read.parquet(target_path)
-    except Exception:
+    except AnalysisException as e:
+        # only "no table yet" may skip the dedup; any other read error
+        # would silently turn the keyed load into a plain append
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         existing = None
     fresh = idempotent_append(batch, existing)
     fresh.write.mode("append").parquet(target_path)
@@ -150,13 +160,7 @@ def ingest_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "must not kill a 10-hour load.",
 )
 def ingest_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
-
-    target = _os.path.join(
-        _tempfile.gettempdir(),
-        f"solarflare_corrupt_jsonl_{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}.json",
-    )
+    target = store_path("corrupt_jsonl", sf_dir)
     # the corrupted feed is generated DISTRIBUTED (to_json + conditional
     # truncation, then a text write) — no driver-side row loop
     line = F.to_json(F.struct("doc_id", "lang"))
@@ -215,13 +219,7 @@ def ingest_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     "to constructing a valid JSON array, not a pattern for data.",
 )
 def ingest_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
-
-    target = _os.path.join(
-        _tempfile.gettempdir(),
-        f"solarflare_multiline_json_{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}",
-    )
+    target = store_path("multiline_json", sf_dir)
     obj = F.concat(
         F.lit('{"doc_id": '),
         F.col("doc_id").cast("string"),

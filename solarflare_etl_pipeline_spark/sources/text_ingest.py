@@ -16,36 +16,24 @@ arity filter rather than crashing the scan — at scale you count them
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.registry import register
-
-#: (abs sf_dir) -> path of the line-format documents copy (write-once
-#: per process+sf).
-_TEXT_SRC: dict[str, str] = {}
+from solarflare_etl_pipeline_spark.state import build_once
 
 
 def ensure_text_corpus(spark: SparkSession, sf_dir: str) -> str:
-    key = os.path.abspath(sf_dir)
-    path = _TEXT_SRC.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_text_corpus_{os.path.basename(key)}_{os.getpid()}",
-        )
-        (
-            table(spark, sf_dir, "documents")
-            .select(F.concat_ws("\t", "doc_id", "lang", "source", "text").alias("value"))
-            .write.mode("overwrite")
-            .text(path)
-        )
-        _TEXT_SRC[key] = path
-    return path
+    """Write ``documents`` one tab-separated line per row, once per source."""
+    return build_once(
+        "text_corpus",
+        sf_dir,
+        lambda path: table(spark, sf_dir, "documents")
+        .select(F.concat_ws("\t", "doc_id", "lang", "source", "text").alias("value"))
+        .write.mode("overwrite")
+        .text(path),
+    )
 
 
 @register(

@@ -5,7 +5,7 @@ Rounds out the source-format surface (parquet, JSON, CSV, raw text,
 JDBC, ORC, HTTP, custom Python source) with the remaining
 enterprise-intake shape: nested markup drops. Same contract discipline
 as ``csv_ingest``: explicit schema (never a type-inference second scan),
-FAILFAST on malformed rows, write-once fixture per (process, sf), and an
+FAILFAST on malformed rows, fixture written once per source, and an
 oracle recomputed from the parquet view so the text round trip itself is
 what is certified (Java's shortest-repr double formatting survives XML
 exactly like CSV).
@@ -19,15 +19,13 @@ intake followed by a projection.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once
 
 PART_XML_SCHEMA = T.StructType(
     [
@@ -40,28 +38,18 @@ PART_XML_SCHEMA = T.StructType(
     ]
 )
 
-#: (abs sf_dir) -> path of the XML copy this process already wrote.
-_PART_XML: dict[str, str] = {}
-
 
 def ensure_part_xml(spark: SparkSession, sf_dir: str) -> str:
-    """Write ``part`` as row-tagged XML once per (process, sf)."""
-    key = os.path.abspath(sf_dir)
-    path = _PART_XML.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_part_xml_{os.path.basename(key)}_{os.getpid()}",
-        )
-        (
-            table(spark, sf_dir, "part")
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rowTag", "part")
-            .save(path)
-        )
-        _PART_XML[key] = path
-    return path
+    """Write ``part`` as row-tagged XML once per source."""
+    return build_once(
+        "part_xml",
+        sf_dir,
+        lambda path: table(spark, sf_dir, "part")
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rowTag", "part")
+        .save(path),
+    )
 
 
 @register(

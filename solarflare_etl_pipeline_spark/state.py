@@ -1,52 +1,64 @@
-"""Persisted cross-run state for the incremental operator family.
+"""Scratch space: where every file the engine derives from a source lives.
 
-The incremental ops (``llm_dedup_near_incremental``,
-``llm_pack_ffd_incremental``, ``graph_cc_incremental``) carry state
-between "daily" runs: the MinHash banding table, the FFD run-compressed
-bin table, and the CC node->label table. Each is persisted once per
-(process, source dir) under the system tempdir by an ``ensure_*_store``
-helper in its operator module.
+Queries that need their input in another shape (a CSV or XML copy, a
+partitioned or bucketed layout, stream-source files, an incremental
+store, a sink's round-trip target, a checkpoint) write it here, under one
+policy:
 
-This module owns the PATH DERIVATION for those stores (ADVICE r12 #1):
-the original scheme keyed the on-disk name by ``basename(sf_dir)`` while
-caching by ``abspath(sf_dir)``, so two distinct fixture dirs sharing a
-basename in one process silently overwrote each other's store — and a
-rewritten sf_dir kept serving the stale store. Both hazards are closed
-here by deriving the filename from a sha1 of the ABSOLUTE path plus a
-FINGERPRINT of the source dir contents (name/size/mtime of every file):
+* **Root.** One directory per process, created on first use under
+  ``tempfile.gettempdir()`` (so it follows ``TMPDIR``) and removed, with
+  everything in it, when the interpreter exits.
+* **Key.** An artifact is named ``solarflare_<kind>_<digest>``. ``kind``
+  says what it is; the digest covers the source directory's absolute
+  path and a fingerprint of its contents. Two sources that share a
+  basename get different names, and a source rewritten in place gets a
+  new name.
+* **Reuse.** ``build_once`` builds an artifact the first time its name is
+  asked for in this process and hands back the finished path after that.
+  Because the name covers the source contents, a reused artifact is
+  always the one built from the same source; stale reuse cannot happen.
+* **Removal.** Nothing is written outside the root, so deleting the root
+  deletes every artifact. Writers that must start clean on each call (a
+  sink's overwrite target, a fresh checkpoint) clear their own path.
 
-* distinct dirs with equal basenames -> distinct digests -> distinct
-  stores;
-* in-process rewrite of a source table -> new fingerprint -> new store
-  path -> the ensure helper rebuilds instead of serving stale state.
-
-100 TB note: in production these stores would live on durable shared
-storage (object store / warehouse table) keyed by pipeline id, with the
-compaction op (``maintenance_store_compact`` in operators/analytics.py)
-run on the same cadence as the incremental jobs; the tempdir is the
-sandbox stand-in. The derivation logic — content-addressed by source
-identity, never by display name — is the part that carries over.
+At cluster scale the root is durable shared storage keyed by pipeline id
+and the fingerprint is the table format's snapshot id; the naming rule
+is the part that carries over.
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
+from collections.abc import Callable
 
-__all__ = ["store_path", "source_fingerprint"]
+__all__ = ["build_once", "source_fingerprint", "store_path"]
+
+_ROOT: str | None = None
+#: Paths whose artifact this process has finished building.
+_BUILT: set[str] = set()
+
+
+def _scratch_root() -> str:
+    """This process's scratch directory, created on first use."""
+    global _ROOT
+    if _ROOT is None:
+        _ROOT = tempfile.mkdtemp(prefix="solarflare_")
+        atexit.register(shutil.rmtree, _ROOT, ignore_errors=True)
+    return _ROOT
 
 
 def source_fingerprint(sf_dir: str) -> str:
     """sha1 over (name, size, mtime_ns) of every entry in ``sf_dir``.
 
-    One ``os.scandir`` pass — no file contents are read, so this is
-    O(#tables) regardless of data scale (the sf dirs hold ~10 parquet
-    files; at 100 TB the equivalent is the table-format snapshot id).
+    One ``os.scandir`` pass and no file contents read, so the cost is
+    O(#tables) at any data scale.
     """
-    root = os.path.abspath(sf_dir)
     parts = []
-    with os.scandir(root) as it:
+    with os.scandir(os.path.abspath(sf_dir)) as it:
         for entry in sorted(it, key=lambda e: e.name):
             st = entry.stat()
             parts.append(f"{entry.name}:{st.st_size}:{st.st_mtime_ns}")
@@ -54,17 +66,19 @@ def source_fingerprint(sf_dir: str) -> str:
 
 
 def store_path(kind: str, sf_dir: str) -> str:
-    """Deterministic per-(process, source-identity) store location.
-
-    ``kind`` is the store family (``sig`` / ``ffd`` / ``cc``). The
-    digest covers abspath AND content fingerprint, so equal basenames
-    cannot collide and rewritten sources cannot alias a stale store.
-    """
+    """Scratch path of the ``kind`` artifact derived from ``sf_dir``."""
     key = os.path.abspath(sf_dir)
     digest = hashlib.sha1(
         f"{key}|{source_fingerprint(key)}".encode("utf-8")
     ).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"solarflare_{kind}_store_{digest}_{os.getpid()}",
-    )
+    return os.path.join(_scratch_root(), f"solarflare_{kind}_{digest}")
+
+
+def build_once(kind: str, sf_dir: str, build: Callable[[str], object]) -> str:
+    """Return the ``kind`` artifact's path, calling ``build(path)`` to
+    write it the first time this process asks for it."""
+    path = store_path(kind, sf_dir)
+    if path not in _BUILT:
+        build(path)
+        _BUILT.add(path)
+    return path

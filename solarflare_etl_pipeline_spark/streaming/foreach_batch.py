@@ -26,7 +26,6 @@ holds all state in the store; the partial-merge protocol bounds it.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,30 +33,21 @@ from pyspark.sql import functions as F
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.functions.numeric import DEC, sql_dsum
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.state import build_once, store_path
 
-#: (abs sf_dir) -> directory holding the 4-file stream source copy of
-#: ``events`` (write-once per process+sf, same discipline as the other
-#: prepared inputs).
-_STREAM_SRC: dict[str, str] = {}
 
 
 def ensure_events_stream_files(spark: SparkSession, sf_dir: str) -> str:
-    key = os.path.abspath(sf_dir)
-    path = _STREAM_SRC.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"solarflare_events_stream_{os.path.basename(key)}_{os.getpid()}",
-        )
-        (
-            table(spark, sf_dir, "events")
-            .select("event_id", "ts", "event_type", "value")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _STREAM_SRC[key] = path
-    return path
+    """Write ``events`` as a 4-file stream source once per source."""
+    return build_once(
+        "events_stream",
+        sf_dir,
+        lambda path: table(spark, sf_dir, "events")
+        .select("event_id", "ts", "event_type", "value")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 def partial_agg_sink(out_dir: str):
@@ -96,9 +86,8 @@ def partial_agg_sink(out_dir: str):
 )
 def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = ensure_events_stream_files(spark, sf_dir)
-    tag = f"{os.path.basename(os.path.abspath(sf_dir))}_{os.getpid()}"
-    out = os.path.join(tempfile.gettempdir(), f"solarflare_fb_out_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"solarflare_fb_ckpt_{tag}")
+    out = store_path("fb_out", sf_dir)
+    ckpt = store_path("fb_ckpt", sf_dir)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
@@ -153,14 +142,8 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    tag = f"{os.path.basename(os.path.abspath(sf_dir))}_{os.getpid()}"
-    src = os.path.join(tempfile.gettempdir(), f"solarflare_restart_src_{tag}")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"solarflare_restart_stage_{tag}"
-    )
-    out = os.path.join(tempfile.gettempdir(), f"solarflare_restart_out_{tag}")
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"solarflare_restart_ckpt_{tag}"
+    src, stage, out, ckpt = (
+        store_path(f"restart_{d}", sf_dir) for d in ("src", "stage", "out", "ckpt")
     )
     for d in (src, stage, out, ckpt):
         shutil.rmtree(d, ignore_errors=True)

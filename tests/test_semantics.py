@@ -2216,20 +2216,3 @@ def test_cc_portable_exactly_four_round_semantics(spark, tmp_path):
             assert changed_at_last
             assert len(expect) > 1  # not fully converged to one seed
 
-
-def test_graph_bcast_gate_off_is_result_identical(spark, sf_dir, monkeypatch):
-    """SOLARFLARE_GRAPH_BCAST=0 (r14: the edge/node broadcast gate,
-    VERDICT r13 #1) must change the JOIN STRATEGY only, never the
-    result: triangle counts and CC ledgers are collect-identical with
-    the hints swapped for shuffle_merge. The env var is read at
-    plan-build time, so building one frame per setting suffices."""
-    for name in ("graph_triangle_count", "graph_cc_portable"):
-        monkeypatch.delenv("SOLARFLARE_GRAPH_BCAST", raising=False)
-        on = sorted(
-            tuple(r) for r in SPECS[name].spark(spark, sf_dir).collect()
-        )
-        monkeypatch.setenv("SOLARFLARE_GRAPH_BCAST", "0")
-        off = sorted(
-            tuple(r) for r in SPECS[name].spark(spark, sf_dir).collect()
-        )
-        assert on == off, f"{name}: gate changed results"

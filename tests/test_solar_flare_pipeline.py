@@ -81,3 +81,37 @@ def test_idempotent_overlapping_batches(spark, batches):
     df = spark.read.parquet(target)
     assert df.count() == 28
     assert df.select("flr_id").distinct().count() == 28
+
+
+def test_unreadable_target_fails_the_load(spark, tmp_path):
+    """Only a missing target means "no table yet": a target that exists
+    but cannot be read as Parquet must fail the load, not skip the keyed
+    dedup and append every fetched row again."""
+    fetch = _write_batch(tmp_path, "fetch.json", [_mk_flare(i) for i in (1, 2, 3)])
+    target = tmp_path / "target"
+    target.mkdir()
+    (target / "junk.txt").write_text("not parquet")
+    for _ in range(2):
+        with pytest.raises(Exception):
+            load_flares(spark, fetch, str(target))
+    assert sorted(p.name for p in target.iterdir()) == ["junk.txt"]
+
+
+def test_pretty_printed_fetch_fails_and_leaves_target(spark, batches, tmp_path):
+    """A pretty-printed JSON array is not line-delimited: the read must
+    fail instead of appending an all-NULL row with a NULL key. Compact
+    one-line arrays, like the DONKI API returns, still load."""
+    b1, _, target = batches
+    load_flares(spark, b1, target)
+    recs = [_mk_flare(i) for i in range(21, 24)]
+    pretty = tmp_path / "pretty.json"
+    pretty.write_text(json.dumps(recs, indent=2))
+    with pytest.raises(Exception):
+        load_flares(spark, str(pretty), target)
+    df = spark.read.parquet(target)
+    assert df.count() == 20
+    assert df.where("flr_id IS NULL").count() == 0
+    compact = tmp_path / "compact.json"
+    compact.write_text(json.dumps(recs))
+    load_flares(spark, str(compact), target)
+    assert spark.read.parquet(target).count() == 23
