@@ -12,11 +12,14 @@ Nothing quadratic, nothing driver-side.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.catalog import repartition_compute, table
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.session import run_concurrently
 from solarflare_etl_pipeline_spark.state import build_once
 
 #: In-order pair generator over a SORTED array column: all (x, y) with x
@@ -4679,23 +4682,6 @@ _CC_INC_ORACLE = _REG["graph_cc_incremental"].oracle
     "nothing else.",
 )
 def flagship_incremental_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor, as_completed
-
-    # The three component pipelines are INDEPENDENT until the final
-    # 1x1x1 broadcast fold, but each one runs eager driver-blocking
-    # work while it is being CONSTRUCTED (localCheckpoints of the
-    # batch frames, the FFD bounded-histogram collect). Building them
-    # sequentially serialized those actions; a 3-thread pool overlaps
-    # them so the tail of one component's jobs back-fills the others'
-    # idle executors (guide §2.6). Store paths are resolved serially
-    # first — the ensure_* helpers guard module caches check-then-act.
-    # INVARIANT (ADVICE r13): ops run concurrently on the SHARED
-    # session, so no pooled component may mutate session-global state
-    # (spark.conf.set, catalog writes) — all three are pure
-    # DataFrame-composition ops over the read-only stores; any future
-    # component that touches session conf must leave this pool.
-    # Futures are drained with as_completed so the first failure
-    # raises immediately instead of blocking on an unrelated sibling.
     from solarflare_etl_pipeline_spark.operators.similarity import (
         ensure_signature_store,
     )
@@ -4703,25 +4689,26 @@ def flagship_incremental_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_ffd_run_store,
     )
 
+    # The three component pipelines are independent until the final
+    # 1x1x1 broadcast fold, but each runs eager jobs while it is being
+    # constructed (localCheckpoints of the batch frames, the FFD
+    # bounded-histogram collect), so they are built concurrently. The
+    # stores are resolved serially first: state.build_once checks then
+    # builds, without a lock.
     ensure_ffd_run_store(spark, sf_dir)
     ensure_cc_label_store(spark, sf_dir)
     ensure_signature_store(spark, sf_dir)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = {
-            pool.submit(
-                _REG["llm_pack_ffd_incremental"].spark, spark, sf_dir
-            ): "ffd",
-            pool.submit(
-                _REG["graph_cc_incremental"].spark, spark, sf_dir
-            ): "cc",
-            pool.submit(
-                _REG["llm_dedup_near_incremental"].spark, spark, sf_dir
-            ): "nd",
-        }
-        out = {}
-        for fut in as_completed(futs):
-            out[futs[fut]] = fut.result()  # first failure raises now
-    ffd, cc, nd = out["ffd"], out["cc"], out["nd"]
+    ffd, cc, nd = run_concurrently(
+        spark,
+        [
+            partial(_REG[name].spark, spark, sf_dir)
+            for name in (
+                "llm_pack_ffd_incremental",
+                "graph_cc_incremental",
+                "llm_dedup_near_incremental",
+            )
+        ],
+    )
     f = ffd.agg(
         F.count("*").cast("long").alias("bins_touched"),
         F.coalesce(F.sum("n_new_chunks"), F.lit(0))

@@ -57,11 +57,14 @@ and the ledger's files_after becomes the post-compaction file count.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from solarflare_etl_pipeline_spark.registry import register
+from solarflare_etl_pipeline_spark.session import run_concurrently
 
 
 def _part_files(path: str) -> list[str]:
@@ -70,6 +73,34 @@ def _part_files(path: str) -> list[str]:
         for f in os.listdir(path)
         if f.startswith("part-") and f.endswith(".parquet")
     ]
+
+
+def _observed_rewrite(
+    part: DataFrame, out: str, transform: Callable[[DataFrame], DataFrame]
+) -> tuple[int, int]:
+    """Write ``transform(part)`` to ``out`` as one parquet file; return
+    (rows read, rows written).
+
+    Both counts are taken inside the write job by ``Observation``s on
+    either side of the transform, so a store costs one job, not the
+    three of count, write, recount; every input row passes the first
+    and every written row the second.
+    """
+    ob, oa = Observation(), Observation()
+    (
+        transform(part.observe(ob, F.count(F.lit(1)).alias("n")))
+        .observe(oa, F.count(F.lit(1)).alias("n"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    try:
+        return int(ob.get["n"]), int(oa.get["n"])
+    except Py4JJavaError:
+        # An empty store scans zero splits; a zero-task plan never
+        # delivers its observed row, and the JVM side of Observation.get
+        # fails an assertion. Counting an empty store is free.
+        return part.count(), part.sparkSession.read.parquet(out).count()
 
 
 def merge_adjacent_runs(
@@ -280,8 +311,6 @@ def _compact_oracle() -> str:
     "not change other queries' answers mid-session).",
 )
 def maintenance_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor, as_completed
-
     from solarflare_etl_pipeline_spark.operators.analytics import (
         ensure_cc_label_store,
     )
@@ -301,38 +330,11 @@ def maintenance_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_path = ensure_ivf_index_store(spark, sf_dir)
 
     def _dedup_rewrite(tag: str, path: str) -> tuple[str, int, int, int, int]:
-        """dropDuplicates -> single-file rewrite, with the before/after
-        counts OBSERVED inside the write job (r14, guide §2.6/§5): the
-        pre-r13 form ran three jobs per store (count, write, recount);
-        observation nodes below and above the dedup count the same rows
-        those jobs counted — input rows (nb) and deduped rows written
-        (na) — in one pass, so the 5-store ledger pays 5 scheduler
-        round-trips instead of 15. Values are identical by
-        construction: every input row flows through the first observe,
-        every written row through the second."""
-        from pyspark.sql import Observation
-
-        ob, oa = Observation(), Observation()
-        part = spark.read.parquet(path)
-        (
-            part.observe(ob, F.count(F.lit(1)).alias("n"))
-            .dropDuplicates()
-            .observe(oa, F.count(F.lit(1)).alias("n"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path + "_compact")
+        out = path + "_compact"
+        nb, na = _observed_rewrite(
+            spark.read.parquet(path), out, DataFrame.dropDuplicates
         )
-        try:
-            nb, na = int(ob.get["n"]), int(oa.get["n"])
-        except Exception:
-            # A zero-task plan (EMPTY store parquet → zero scan splits)
-            # never materializes the CollectMetrics row and
-            # Observation.get asserts — recount the classic way; the
-            # degenerate store is free to scan (test_empty_input pins
-            # this path).
-            nb = part.count()
-            na = spark.read.parquet(path + "_compact").count()
-        return (tag, nb, na, nb - na, len(_part_files(path + "_compact")))
+        return (tag, nb, na, nb - na, len(_part_files(out)))
 
     def _ffd_merge() -> tuple[str, int, int, int, int]:
         # ffd: the run table is dimension-sized (<= ~130 rows by the
@@ -347,9 +349,7 @@ def maintenance_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged, "pos long, cap long, cnt long"
         ).coalesce(1).write.mode("overwrite").parquet(ffd_path + "_compact")
         # rows_after == len(merged) by construction (the write is the
-        # local list, one file); the read-back recount job it replaces
-        # measured the same number (r14: one fewer job on the ledger's
-        # critical path).
+        # local list, one file), so no read-back recount job.
         return (
             "ffd",
             len(raw),
@@ -358,29 +358,18 @@ def maintenance_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             len(_part_files(ffd_path + "_compact")),
         )
 
-    # The five per-store compactions are INDEPENDENT (distinct inputs,
-    # distinct output paths): submit them from a small thread pool so
-    # Spark overlaps their jobs instead of serializing ~15 tiny
-    # scheduler round-trips (guide §2.6 — the maintenance pass is
-    # scheduler-floor-bound, not data-bound: every store is KB-sized).
-    # The ledger result is order-insensitive (sorted below), so thread
-    # completion order cannot change the answer. INVARIANT (ADVICE
-    # r13): pooled tasks share the session and must not mutate
-    # session-global state; as_completed raises the first failure
-    # without waiting on unrelated siblings.
-    tasks = [
-        lambda: _dedup_rewrite("cc", cc_path),
-        _ffd_merge,
-        lambda: _dedup_rewrite("sig", sig_path),
-        lambda: _dedup_rewrite("ivf_centroids", ivf_path + "/centroids"),
-        lambda: _dedup_rewrite("ivf_lists", ivf_path + "/lists"),
-    ]
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        ledger = [
-            f.result()
-            for f in as_completed([pool.submit(t) for t in tasks])
-        ]
-
+    # Five independent compactions (distinct inputs, distinct output
+    # paths); the ledger is sorted, so completion order cannot change it.
+    ledger = run_concurrently(
+        spark,
+        [
+            lambda: _dedup_rewrite("cc", cc_path),
+            _ffd_merge,
+            lambda: _dedup_rewrite("sig", sig_path),
+            lambda: _dedup_rewrite("ivf_centroids", ivf_path + "/centroids"),
+            lambda: _dedup_rewrite("ivf_lists", ivf_path + "/lists"),
+        ],
+    )
     return spark.createDataFrame(sorted(ledger), _LEDGER_SCHEMA)
 
 
@@ -432,8 +421,6 @@ def maintenance_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast.",
 )
 def maintenance_store_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor, as_completed
-
     from solarflare_etl_pipeline_spark.operators.similarity import (
         ensure_ivf_index_store,
         ensure_signature_store,
@@ -445,51 +432,28 @@ def maintenance_store_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _ttl_rewrite(
         tag: str, path: str, out: str, key: str
     ) -> tuple[str, int, int, int, int]:
-        from pyspark.sql import Observation
-
-        # nb/na observed inside the write job (r14 — the store-compact
-        # pattern: same values, two fewer scheduler round-trips per
-        # store). nd needs COUNT(DISTINCT) over the TOMBSTONED rows,
-        # which observe() cannot express (distinct aggregates are
-        # rejected) — it stays its own tiny job.
-        ob, oa = Observation(), Observation()
         part = spark.read.parquet(path)
         tomb = F.pmod(F.col(key), F.lit(97)) == 0
-        (
-            part.observe(ob, F.count(F.lit(1)).alias("n"))
-            .where(~tomb)
-            .observe(oa, F.count(F.lit(1)).alias("n"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        try:
-            nb, na = int(ob.get["n"]), int(oa.get["n"])
-        except Exception:
-            # zero-task plan (empty store): see _dedup_rewrite
-            nb = part.count()
-            na = spark.read.parquet(out).count()
+        nb, na = _observed_rewrite(part, out, lambda df: df.where(~tomb))
+        # keys_dropped needs COUNT(DISTINCT) over the tombstoned rows,
+        # which observe() rejects, so it stays its own job.
         nd = part.where(tomb).select(key).distinct().count()
         return (tag, nb, na, nb - na, nd)
 
     # ANN deletion: tombstoned vectors leave the inverted lists (the
     # centroids stay — a trained coarse quantizer remains valid after
     # deletions; deleted vectors must just stop being returned, proved
-    # in tests/test_semantics.py). The two store rewrites are
-    # independent (distinct inputs and outputs) — overlap their jobs
-    # (guide §2.6); the sorted ledger is order-insensitive.
-    tasks = [
-        lambda: _ttl_rewrite(
-            "ivf_lists", ivf_path + "/lists", ivf_path + "/lists_ttl", "vec_id"
-        ),
-        lambda: _ttl_rewrite("sig", sig_path, sig_path + "_ttl", "doc_id"),
-    ]
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        rows = [
-            f.result()
-            for f in as_completed([pool.submit(t) for t in tasks])
-        ]
-
+    # in tests/test_semantics.py). The two rewrites are independent and
+    # the ledger is sorted.
+    rows = run_concurrently(
+        spark,
+        [
+            lambda: _ttl_rewrite(
+                "ivf_lists", ivf_path + "/lists", ivf_path + "/lists_ttl", "vec_id"
+            ),
+            lambda: _ttl_rewrite("sig", sig_path, sig_path + "_ttl", "doc_id"),
+        ],
+    )
     return spark.createDataFrame(
         sorted(rows),
         "store string, rows_before long, rows_after long, "

@@ -41,7 +41,6 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write bucketed external copies of orders/lineitem once per source
     and session, and return their table names (the scratch leaf name
     doubles as the table name)."""
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     names = []
     for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         path = store_path(f"bkt_{name}", sf_dir)

@@ -10,8 +10,14 @@ parallelism rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "solarflare-spark", cpus: int | None = None) -> SparkSession:
@@ -58,3 +64,32 @@ def get_spark(app_name: str = "solarflare-spark", cpus: int | None = None) -> Sp
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run a query's independent pieces of Spark work on one thread each
+    and return their results in submission order.
+
+    At fixture scale a query's cost is scheduler round-trips, not data,
+    so overlapping the jobs of independent sub-plans (distinct inputs,
+    distinct outputs) lets one piece's tail back-fill the executors the
+    others leave idle.
+
+    Each thunk is wrapped with ``inheritable_thread_target`` here, in the
+    calling thread, so the jobs it launches carry the caller's local
+    properties (job group, description, scheduler pool) and session
+    tags: per-query job ledgers built from job groups see every job.
+    Each thunk gets its own copy of the properties, because Spark records
+    a running SQL execution's id in them.
+
+    The thunks share the session, so a thunk must not mutate
+    session-global state: no ``spark.conf.set`` (in particular no call to
+    ``streaming.event_windows.run_available_now``, which saves and
+    restores ``spark.sql.shuffle.partitions``), no catalog writes, no
+    temp views. Every thunk runs to completion; the first failure in
+    submission order is then raised.
+    """
+    wrapped = [inheritable_thread_target(spark)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=len(wrapped)) as pool:
+        futures = [pool.submit(t) for t in wrapped]
+    return [f.result() for f in futures]

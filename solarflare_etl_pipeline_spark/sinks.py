@@ -37,7 +37,7 @@ from solarflare_etl_pipeline_spark.functions.numeric import (
     sql_rate,
 )
 from solarflare_etl_pipeline_spark.registry import register
-from solarflare_etl_pipeline_spark.state import build_once, store_path
+from solarflare_etl_pipeline_spark.state import build_once, derby_url, store_path
 
 
 def write_partitioned_parquet(df: DataFrame, path: str, partition_col: str) -> None:
@@ -76,7 +76,7 @@ def write_jdbc(df: DataFrame, url: str, table_name: str, mode: str = "append", *
     "Postgres/MySQL by swapping the URL.",
 )
 def sink_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    url = f"jdbc:derby:{store_path('derby', sf_dir)};create=true"
+    url = derby_url(spark, store_path("derby", sf_dir))
     agg = (
         table(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")

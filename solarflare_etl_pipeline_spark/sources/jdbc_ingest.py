@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 from solarflare_etl_pipeline_spark.catalog import table
 from solarflare_etl_pipeline_spark.functions.numeric import dsum
 from solarflare_etl_pipeline_spark.registry import register
-from solarflare_etl_pipeline_spark.state import build_once
-
+from solarflare_etl_pipeline_spark.state import build_once, derby_url
 
 
 def _ensure_orders_table(spark: SparkSession, sf_dir: str) -> str:
@@ -40,14 +39,14 @@ def _ensure_orders_table(spark: SparkSession, sf_dir: str) -> str:
             table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
             .write.format("jdbc")
-            .option("url", f"jdbc:derby:{db};create=true")
+            .option("url", derby_url(spark, db))
             .option("dbtable", "orders_src")
             .option("batchsize", "10000")
             .mode("overwrite")
             .save()
         )
 
-    return f"jdbc:derby:{build_once('derby_src', sf_dir, build)};create=true"
+    return derby_url(spark, build_once("derby_src", sf_dir, build))
 
 
 @register(

@@ -18,8 +18,10 @@ policy:
   Because the name covers the source contents, a reused artifact is
   always the one built from the same source; stale reuse cannot happen.
 * **Removal.** Nothing is written outside the root, so deleting the root
-  deletes every artifact. Writers that must start clean on each call (a
-  sink's overwrite target, a fresh checkpoint) clear their own path.
+  deletes every artifact, embedded Derby's error log included (Derby
+  otherwise writes it to the working directory). Writers that must start
+  clean on each call (a sink's overwrite target, a fresh checkpoint)
+  clear their own path.
 
 At cluster scale the root is durable shared storage keyed by pipeline id
 and the fingerprint is the table format's snapshot id; the naming rule
@@ -35,7 +37,9 @@ import shutil
 import tempfile
 from collections.abc import Callable
 
-__all__ = ["build_once", "source_fingerprint", "store_path"]
+from pyspark.sql import SparkSession
+
+__all__ = ["build_once", "derby_url", "source_fingerprint", "store_path"]
 
 _ROOT: str | None = None
 #: Paths whose artifact this process has finished building.
@@ -82,3 +86,17 @@ def build_once(kind: str, sf_dir: str, build: Callable[[str], object]) -> str:
         build(path)
         _BUILT.add(path)
     return path
+
+
+def derby_url(spark: SparkSession, db_path: str) -> str:
+    """JDBC url of an embedded Derby database at ``db_path``.
+
+    Derby reads where to write its error log when it boots, the first
+    time any database is opened in the JVM; every Derby url comes from
+    here, so the log is placed in the scratch root before that happens.
+    """
+    jvm = spark.sparkContext._jvm
+    jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", os.path.join(_scratch_root(), "derby.log")
+    )
+    return f"jdbc:derby:{db_path};create=true"

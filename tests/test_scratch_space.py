@@ -63,20 +63,29 @@ def test_same_basename_sources_do_not_share_derived_files(
 
 
 def test_scratch_is_removed_at_exit(tmp_path, sf_dir):
-    """A process that builds a derived input leaves no ``solarflare_*``
-    entry in its temp directory once it exits."""
+    """A process that builds a derived input and round-trips the JDBC
+    sink leaves no ``solarflare_*`` entry in its temp directory once it
+    exits, and no Derby log in its working directory."""
     scratch = tmp_path / "tmp"
     scratch.mkdir()
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
     code = (
         "import os, sys\n"
         "from solarflare_etl_pipeline_spark.session import get_spark\n"
+        "from solarflare_etl_pipeline_spark.sinks import sink_jdbc\n"
         "from solarflare_etl_pipeline_spark.sources.csv_ingest import ensure_customer_csv\n"
-        "path = ensure_customer_csv(get_spark('scratch-exit', cpus=1), sys.argv[1])\n"
+        "spark = get_spark('scratch-exit', cpus=1)\n"
+        "path = ensure_customer_csv(spark, sys.argv[1])\n"
         "assert path.startswith(os.environ['TMPDIR']) and os.path.isdir(path), path\n"
+        "assert sink_jdbc(spark, sys.argv[1]).count() > 0\n"
     )
-    env = dict(os.environ, TMPDIR=str(scratch), SPARK_GRAFT_DRIVER_MEM="1g")
+    env = dict(
+        os.environ, TMPDIR=str(scratch), SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=REPO
+    )
     subprocess.run(
-        [sys.executable, "-c", code, sf_dir], cwd=REPO, env=env, check=True,
+        [sys.executable, "-c", code, sf_dir], cwd=cwd, env=env, check=True,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=300,
     )
     assert [p.name for p in scratch.iterdir() if p.name.startswith("solarflare_")] == []
+    assert list(cwd.iterdir()) == []
